@@ -192,11 +192,13 @@ object DriverQueries {
   /** The r3b fielded source over the documents' NATURAL fields: contents =
    * text tokens; source/lang = the column value as a one-token field.
    * Map-only (same in-row tf as the split source). */
-  private def fieldedNaturalSource(s: SparkSession, d: String): DataFrame = {
+  private[graft] def fieldedNaturalSource(s: SparkSession, d: String): DataFrame = {
     val docs = Transcripts.table(s, d, "documents")
       .select(concat(lit("doc-"), col("doc_id").cast("string"), lit("#0")).as("docId"),
         col("text"), col("lang"), col("source"))
-    val contents = docs
+    // a null text has no tokens: drop it before split, or the null array
+    // reaches toksTfUdf (as repetitionStats does)
+    val contents = docs.filter(col("text").isNotNull)
       .select(col("docId"), lit("contents").as("field"),
         size(split(col("text"), " ")).cast("long").as("docLen"),
         explode(toksTfUdf(split(col("text"), " "))).as(Seq("term", "tf")))

@@ -50,6 +50,24 @@ final case class Qrel(qid: Int, docId: String, judge: Int)
  * (reference: `Searcher.java:204-226`). */
 final case class RunRow(qid: Int, docId: String, rank: Int, score: Float, tag: String)
 
+/** Block-max metadata of one compressed posting block — what the shared
+ * Block-Max WAND loop (`query/BlockMax.scala`) reads from a flat
+ * [[PostingBlock]] or a [[FieldedBlock]]: the doc range for block skips,
+ * (maxTf, minDocLen) for the block upper bound, and the encoded columns it
+ * decodes lazily. */
+trait BlockMeta {
+  def shard: Int
+  def term: String
+  def n: Int
+  def minDoc: Long
+  def maxDoc: Long
+  def maxTf: Long
+  def minDocLen: Long
+  def docBytes: Array[Byte]
+  def tfBytes: Array[Byte]
+  def dlBytes: Array[Byte]
+}
+
 /**
  * One compressed posting block (SURVEY.md §7.2). Postings of a term are split
  * into fixed-size blocks of (docId, tf) pairs sorted by docId; docIds are
@@ -71,6 +89,7 @@ final case class PostingBlock(
     docBytes: Array[Byte],  // delta+varint docIdNums
     tfBytes: Array[Byte],   // varint (tf-1)
     dlBytes: Array[Byte])   // varint (docLen-1), denormalized norms
+    extends BlockMeta
 
 /** Per-document identity map: stable string key ↔ dense numeric id whose
  * ascending order equals the docId string order (tie-break invariant). */
@@ -97,3 +116,4 @@ final case class FieldedBlock(
     docBytes: Array[Byte],
     tfBytes: Array[Byte],
     dlBytes: Array[Byte])
+    extends BlockMeta

@@ -90,6 +90,16 @@ class EngineSpec extends AnyFunSuite {
     val want = Oracle.topk(turnsLocal, topics, model, K, SENT).sortBy(t => (t._1, t._3))
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) => assert(g == w, s"got $g want $w") }
+    // cross-engine rounded-double mode: identity per-term map, half-up finish
+    val gotR = BlockMaxWand.search(index, topics, model, K, sentinelDocId = Some(SENT),
+        roundedDouble = Some(4))
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
+    val td = Tokenize.termDocs(turns)
+    val wantR = Exact.search(td, Dictionary.termStats(td),
+        Tokenize.corpusStats(Tokenize.docs(turns)), topics, model, K,
+        sentinelDocId = Some(SENT), roundedDouble = Some(4))
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
+    assert(gotR == wantR, s"rounded mode diverged:\n  missing=${wantR -- gotR}\n  extra=${gotR -- wantR}")
   }
 
   test("BMW ≡ exact for a parameter-free model (DirichletLM)") {

@@ -276,15 +276,15 @@ class FieldedSpec extends AnyFunSuite {
     // 'contents' boosted, role boosted, tool NOT in the boost map (scores 0
     // but still counts for msm — the silent-field semantics of Fielded.score)
     val boosts = Map("role" -> 0.9, "contents" -> 0.3)
-    for (k <- Seq(3, 10, 50)) {
+    for (k <- Seq(3, 10, 50); rounded <- Seq(Some(4), None)) {
       val want = Fielded.searchIndexed(idx, topics, Scoring.BM25c(0.9, 0.4), k,
-          boosts = boosts, rounded = Some(4))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
+          boosts = boosts, rounded = rounded)
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
       val got = graft.query.FieldedBlockMax.search(fb, topics,
-          Scoring.BM25c(0.9, 0.4), k, boosts = boosts, rounded = Some(4))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
+          Scoring.BM25c(0.9, 0.4), k, boosts = boosts, rounded = rounded)
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
       assert(got == want,
-        s"k=$k diverged:\n  missing=${want -- got}\n  extra=${got -- want}")
+        s"k=$k rounded=$rounded diverged:\n  missing=${want -- got}\n  extra=${got -- want}")
     }
   }
 
@@ -325,5 +325,20 @@ class FieldedSpec extends AnyFunSuite {
     val got = Fielded.search(fd, Seq(Topic(1, "apple")), Scoring.BM25c(0.9, 0.4), 10)
       .collect()
     assert(got.length == 1 && got.head.getString(1) == "d1")
+  }
+
+  test("natural fielded source: a null-text document keeps its meta fields, emits no contents") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-natural-null").toString
+    Seq((1L, "apple pie apple", "en", "web"), (2L, null, "tr", "news"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    val got = graft.driver.DriverQueries.fieldedNaturalSource(spark, dir)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
+      .toSet
+    assert(got == Set(
+      ("doc-1#0", "contents", "apple", 2L, 3L), ("doc-1#0", "contents", "pie", 1L, 3L),
+      ("doc-1#0", "source", "web", 1L, 1L), ("doc-1#0", "lang", "en", 1L, 1L),
+      ("doc-2#0", "source", "news", 1L, 1L), ("doc-2#0", "lang", "tr", 1L, 1L)))
   }
 }
