@@ -78,8 +78,9 @@ object DriverQueries {
     task.run() // claims + runs in THIS thread if unclaimed; no-op otherwise
     try task.get().asInstanceOf[A]
     catch { case e: java.util.concurrent.ExecutionException =>
-      // don't memoize failures — drop the entry so a later call can retry
-      memo.synchronized { memo.remove(key) }
+      // don't memoize failures — drop the entry so a later call can retry,
+      // unless another caller has already replaced it with a fresh task
+      memo.synchronized { if (memo.get(key).exists(_ eq task)) memo.remove(key) }
       throw e.getCause
     }
   }
@@ -269,14 +270,15 @@ object DriverQueries {
         java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
           .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
       } catch { case _: Throwable => }
+    // await every task, in flight or not (a derivation still running on a
+    // non-prefetch caller's thread would otherwise leak its persisted frame
+    // or temp dir); a failed one holds nothing to release
     val tasks = memo.synchronized { val ts = memo.values.toSeq; memo.clear(); ts }
     tasks.foreach { t =>
-      if (t.isDone) {
-        (try t.get() catch { case _: Throwable => null }) match {
-          case df: DataFrame        => df.unpersist(blocking = true)
-          case (_, dir: String)     => rmDir(dir) // index / fielded index entries
-          case _                    =>
-        }
+      (try t.get() catch { case _: Throwable => null }) match {
+        case df: DataFrame        => df.unpersist(blocking = true)
+        case (_, dir: String)     => rmDir(dir) // index / fielded index entries
+        case _                    =>
       }
     }
     streamTmpDirs.foreach(rmDir)
@@ -1565,8 +1567,11 @@ object DriverQueries {
    * parallelism (at sf10's 500k docs this saturates back to the session
    * value; at 100 TB the cap IS the cluster parallelism). Results are
    * partition-count-invariant (exact dedup / exact aggregation / stateless
-   * map); only task and state-file counts change. */
-  private def withStreamShufflePartitions[A](s: SparkSession, nDocs: Long)(f: => A): A = {
+   * map); only task and state-file counts change. The sfDir's background
+   * prefetch builds are awaited first: they would otherwise run under the
+   * shrunken session-global setting and race its restore. */
+  private def withStreamShufflePartitions[A](s: SparkSession, d: String, nDocs: Long)(f: => A): A = {
+    awaitPrefetch(d)
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     val target = math.max(2L, math.min(prev.toLong, nDocs / 2000L + 1L))
@@ -1608,7 +1613,7 @@ object DriverQueries {
         // semantics the gate pins (originals fully committed before the
         // copies arrive) live in the processAllAvailable barrier, not in
         // how many micro-batches each group is chopped into
-        withStreamShufflePartitions(s, corpusStats(s, d).numDocs) {
+        withStreamShufflePartitions(s, d, corpusStats(s, d).numDocs) {
           val src = s.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 2).parquet(inDir)
           val q = graft.streaming.Streams.dedupByContent(src, "id", "text")
@@ -1639,7 +1644,7 @@ object DriverQueries {
           .select(col("doc_id").cast("long").as("id"), col("text"))
         val inDir = streamTmp("graft-st4-in")
         val outDir = streamTmp("graft-st4-out")
-        withStreamShufflePartitions(s, corpusStats(s, d).numDocs) {
+        withStreamShufflePartitions(s, d, corpusStats(s, d).numDocs) {
           val src = s.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 2).parquet(inDir)
           val out = graft.streaming.Streams.topicMatches(
@@ -1684,7 +1689,7 @@ object DriverQueries {
           .select(col("doc_id").cast("long").as("doc_id"), col("text"))
         val inDir = streamTmp("graft-st2-in")
         val qn = memQueryName("st2")
-        withStreamShufflePartitions(s, corpusStats(s, d).numDocs) {
+        withStreamShufflePartitions(s, d, corpusStats(s, d).numDocs) {
           val src = s.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 2).parquet(inDir)
             .withColumn("ts", col("doc_id").cast("timestamp"))
@@ -1717,7 +1722,7 @@ object DriverQueries {
         val inDir = streamTmp("graft-st3-in")
         val dir = streamTmp("graft-stream-idx")
         val ckpt = streamTmp("graft-stream-ckpt")
-        withStreamShufflePartitions(s, corpusStats(s, d).numDocs) {
+        withStreamShufflePartitions(s, d, corpusStats(s, d).numDocs) {
           val src = s.readStream.schema(turns.schema)
             .option("maxFilesPerTrigger", 2).parquet(inDir)
             .as[graft.model.Turn]

@@ -20,6 +20,11 @@ object Dictionary {
     termDocs.groupBy("term")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
 
+  /** (term, df, cf) from posting-block metadata alone (`n` postings and
+   * `sumTf` per block): no corpus pass, and no posting is decoded. */
+  def fromBlocks(blocks: DataFrame): DataFrame =
+    blocks.groupBy("term").agg(sum("n").as("df"), sum("sumTf").as("cf"))
+
   /**
    * Assign dense term-ordered ids WITHOUT a single-partition global window.
    *

@@ -11,14 +11,17 @@ import graft.model.{CorpusStats, DocEntry, PostingBlock, Turn}
  * Resumable index build (SURVEY.md §7.2/§7.5, north rule: "resumable from
  * checkpoint with per-partition lineage + metrics").
  *
- * On-disk layout under `indexDir/`:
+ * On-disk layout under `indexDir/` — the one contract shared with
+ * [[graft.streaming.Streams.appendBatch]], which grows the same directory:
  * {{{
- *   docs/        docId, docIdNum, docLen        (+ _SUCCESS)
- *   postings/    shard=K/ *.parquet  PostingBlock rows, partitioned by shard
- *   dict/        term, termId, df, cf           (+ _SUCCESS; derived from
- *                                                block metadata — no extra
- *                                                pass over the corpus)
- *   manifest/    per-shard lineage + metrics rows, appended per wave
+ *   docs/           docId, docIdNum, docLen     (+ _SUCCESS)
+ *   postings/       shard=K/ *.parquet  PostingBlock rows, partitioned by shard
+ *   dicts/v=N/      term, termId, df, cf — immutable dictionary snapshots,
+ *                   derived from block metadata (no extra corpus pass)
+ *   manifest/       per-shard lineage + metrics rows, appended per wave
+ *   _dict_version   N of the current snapshot (see [[dictPath]])
+ *   _hwm            highest docIdNum numbered so far (the next append
+ *                   starts at the shard boundary past it)
  * }}}
  *
  * Stage pipeline (each stage skipped when already committed):
@@ -31,7 +34,8 @@ import graft.model.{CorpusStats, DocEntry, PostingBlock, Turn}
  *     Each wave appends manifest rows
  *     `(shard, wave, nBlocks, nPostings, nTerms, sumMaxTf, wallMs)`.
  *  3. `dict` — (term, df, cf) aggregated from block metadata (`n`, `sumTf`)
- *     + dense term-ordered termIds.
+ *     + dense term-ordered termIds, written as the next snapshot whenever
+ *     this call committed posting shards or no snapshot exists yet.
  *
  * Reference analog: `Indexer.indexWithThreads`
  * (`/root/reference/src/main/java/edu/anadolu/Indexer.java:567-654`) —
@@ -50,14 +54,62 @@ object IndexBuild {
         .select("docId", "docLen", "term", "tf")
   }
 
-  private def fs(spark: SparkSession, dir: String) =
+  private[graft] def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(spark: SparkSession, p: String): Boolean =
+  private[graft] def exists(spark: SparkSession, p: String): Boolean =
     fs(spark, p).exists(new Path(p))
 
   def stageDone(spark: SparkSession, stageDir: String): Boolean =
     exists(spark, s"$stageDir/_SUCCESS")
+
+  /** Trimmed UTF-8 body of a marker file, if present. */
+  private[graft] def readSmallFile(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val f = fs(spark, path)
+    if (!f.exists(p)) None
+    else {
+      val in = f.open(p)
+      val b = new java.io.ByteArrayOutputStream()
+      try { var c = in.read(); while (c >= 0) { b.write(c); c = in.read() } } finally in.close()
+      Some(b.toString("UTF-8").trim)
+    }
+  }
+
+  private[graft] def writeSmallFile(spark: SparkSession, path: String, body: String = ""): Unit = {
+    val out = fs(spark, path).create(new Path(path), true)
+    out.write(body.getBytes("UTF-8")); out.close()
+  }
+
+  /** The docId string key of a turn: `conv_id#turn_idx`. */
+  private[graft] def docIdCol = concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")).as("docId")
+
+  /** Writes the (docId, docIdNum, docLen) rows of a numbered
+   * (docId, docIdNum, text) frame to `docsDir`. */
+  private[graft] def writeDocs(withId: DataFrame, tag: Analyzer.Tag, docsDir: String,
+                               mode: String): Unit = {
+    import withId.sparkSession.implicits._
+    withId.select("docId", "docIdNum", "text").as[(String, Long, String)]
+      .mapPartitions(_.map { case (docId, num, text) =>
+        val dl =
+          if (tag == Analyzer.Tag.NoStem) Analyzer.countTokens(text).toLong
+          else Analyzer.analyze(text, tag).size.toLong
+        DocEntry(docId, num, dl)
+      })
+      .write.mode(mode).parquet(docsDir)
+  }
+
+  /** Number of the current dictionary snapshot; 0 before the first one. */
+  private[graft] def dictVersion(spark: SparkSession, indexDir: String): Long =
+    readSmallFile(spark, s"$indexDir/_dict_version").fold(0L)(_.toLong)
+
+  /** Writes `termStats` (term, df, cf) as snapshot `dicts/v=ver`, then
+   * points `_dict_version` at it — readers never see a partial snapshot. */
+  private[graft] def commitDict(spark: SparkSession, indexDir: String,
+                                termStats: DataFrame, ver: Long): Unit = {
+    Dictionary.withIds(termStats).write.mode("overwrite").parquet(s"$indexDir/dicts/v=$ver")
+    writeSmallFile(spark, s"$indexDir/_dict_version", ver.toString)
+  }
 
   /** Shards already fully written (present on disk = committed by a
    * successful wave job; Spark commits partition dirs atomically per job).
@@ -140,14 +192,12 @@ object IndexBuild {
             failAfterWave: Int = -1,
             inputSorted: Boolean = false): Index = {
     val spark = turns.sparkSession
-    import spark.implicits._
     // Resume safety: completedShards treats an on-disk shard=K dir as
     // committed, which is only true under job-level commit — pin the v1
     // committer so partition dirs surface at job commit, never mid-wave.
     spark.sparkContext.hadoopConfiguration
       .setInt("mapreduce.fileoutputcommitter.algorithm.version", 1)
     val docsDir = s"$indexDir/docs"
-    val dictDir = s"$indexDir/dict"
     val postingsDir = s"$indexDir/postings"
     val manifestDir = s"$indexDir/manifest"
 
@@ -160,9 +210,9 @@ object IndexBuild {
     // arbitrary task order — DenseIds numbers them in min-key order). A
     // numeric (conv_id, turn_idx) sort with turn_idx ≥ 10 would fail here
     // ("c#10" sorts before "c#2" numerically but after as a string).
-    if (inputSorted && !stageDone(spark, s"$indexDir/docs")) {
-      val docIdCol = concat(col("conv_id"), lit("#"), col("turn_idx").cast("string"))
-      val bounds = turns.toDF().select(docIdCol.as("docId"))
+    val docsWasDone = stageDone(spark, docsDir)
+    if (inputSorted && !docsWasDone) {
+      val bounds = turns.toDF().select(docIdCol)
         .rdd.mapPartitionsWithIndex { (pi, it) =>
           var first: String = null; var last: String = null; var sorted = true
           it.foreach { r =>
@@ -195,18 +245,13 @@ object IndexBuild {
     // Instead, join the committed mapping back onto the input and restore
     // the shard-build invariant (docIdNum ascending within partitions) with
     // a range shuffle on the now-FIXED numeric ids.
-    val docsWasDone = stageDone(spark, docsDir)
     lazy val freshAssigned = DenseIds.assignCounted(
-      turns.toDF().select(
-        concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")).as("docId"),
-        col("text")),
+      turns.toDF().select(docIdCol, col("text")),
       "docIdNum", assumeSorted = inputSorted, col("docId"))
     lazy val turnsWithId: DataFrame =
       if (docsWasDone) {
         val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
-        turns.toDF().select(
-            concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")).as("docId"),
-            col("text"))
+        turns.toDF().select(docIdCol, col("text"))
           .join(spark.read.parquet(docsDir).select("docId", "docIdNum"), "docId")
           .repartitionByRange(parts, col("docIdNum"))
           .sortWithinPartitions("docIdNum")
@@ -216,7 +261,7 @@ object IndexBuild {
     // Round 6 (optimization guide §2.6): on a FRESH build the docs write is
     // independent of the postings waves (both scan turnsWithId), and the
     // shard space is already known from the numbering's own count pass
-    // (dense ids ⇒ maxDocIdNum = n − 1) — so the docs job runs on its own
+    // (dense ids ⇒ max id = n − 1) — so the docs job runs on its own
     // thread and the postings waves back-fill the scheduler alongside it.
     // The resume path keeps the sequential read of the committed docs.
     @volatile var docsFailure: Throwable = null
@@ -224,40 +269,34 @@ object IndexBuild {
       if (docsWasDone) None
       else {
         val work: Runnable = () =>
-          try {
-            turnsWithId.select("docId", "docIdNum", "text").as[(String, Long, String)]
-              .mapPartitions(_.map { case (docId, num, text) =>
-                val dl =
-                  if (tag == Analyzer.Tag.NoStem) Analyzer.countTokens(text).toLong
-                  else Analyzer.analyze(text, tag).size.toLong
-                DocEntry(docId, num, dl)
-              })
-              .write.mode("overwrite").parquet(docsDir)
-          } catch { case e: Throwable => docsFailure = e }
+          try writeDocs(turnsWithId, tag, docsDir, "overwrite")
+          catch { case e: Throwable => docsFailure = e }
         val t = new Thread(work, "graft-idx-docs")
         t.start()
         Some(t)
       }
 
-    // Shard space from BOTH the doc count and the max id: the build's own
+    // Shard space from BOTH the doc count and the max id (hwm): the build's own
     // numbering is dense (maxId + 1 == numDocs), but a streaming-appended
     // index aligns each batch to a shard boundary, leaving id gaps — a
     // count-only bound would never repair its upper shards. Fresh build:
     // both come from the numbering count (no job); resume: from the
     // committed docs.
-    val (numDocsForShards, maxDocIdNum) =
+    val (numDocsForShards, hwm) =
       if (docsWasDone) {
         val r = spark.read.parquet(docsDir)
           .agg(count(lit(1)), coalesce(max("docIdNum"), lit(-1L))).head()
         (r.getLong(0), r.getLong(1))
       } else (freshAssigned._2, freshAssigned._2 - 1)
+    // durable before any shard: an append after a crashed build still
+    // numbers past every id this build assigned
+    if (hwm >= 0) writeSmallFile(spark, s"$indexDir/_hwm", hwm.toString)
 
     // -- stage 2: postings via fused segment build, shard-granular resume --
     val numShards = math.max(1,
-      ((math.max(numDocsForShards, maxDocIdNum + 1) + docsPerShard - 1) / docsPerShard).toInt)
+      ((math.max(numDocsForShards, hwm + 1) + docsPerShard - 1) / docsPerShard).toInt)
     val done = completedShards(spark, postingsDir)
     val todo = (0 until numShards).filterNot(done)
-    val repairedShards = todo.nonEmpty // consumed by the dict stage below
 
     try if (todo.nonEmpty) {
       val groups = {
@@ -337,71 +376,23 @@ object IndexBuild {
     finally docsThread.foreach(_.join())
     if (docsFailure != null) throw docsFailure
 
-    val docs = spark.read.parquet(docsDir)
-    val statsRow = docs.agg(count(lit(1)), coalesce(sum("docLen"), lit(0L))).head()
-    val stats = CorpusStats(statsRow.getLong(0), statsRow.getLong(1))
-
-    // commit marker for the postings stage as a whole
-    val f = fs(spark, postingsDir)
-    f.create(new Path(s"$postingsDir/_GRAFT_COMPLETE"), true).close()
-
-
-
-    // -- stage 3: dict from block metadata (no corpus pass) --
-    // A streaming-appended index supersedes the flat dict/ with versioned
-    // snapshots (`_dict_version` marker) — never resurrect the stale flat
-    // dir over them. BUT if THIS build call committed new posting shards
-    // (repairing a crashed append), the latest snapshot no longer covers
-    // them: write a fresh full-aggregation snapshot and advance the
-    // version, so the returned dict counts every shard on disk.
-    val hasSnapshots = exists(spark, s"$indexDir/_dict_version")
-    if (hasSnapshots) {
-      if (repairedShards) {
-        val termStats = spark.read.parquet(postingsDir)
-          .groupBy("term")
-          .agg(sum("n").as("df"), sum("sumTf").as("cf"))
-        val newVer = readSmallFile(spark, s"$indexDir/_dict_version").get.toLong + 1
-        Dictionary.withIds(termStats)
-          .write.mode("overwrite").parquet(s"$indexDir/dicts/v=$newVer")
-        writeSmallFile(spark, s"$indexDir/_dict_version", newVer.toString)
-      }
-    } else if (!stageDone(spark, dictDir)) {
-      val termStats = spark.read.parquet(postingsDir)
-        .groupBy("term")
-        .agg(sum("n").as("df"), sum("sumTf").as("cf"))
-      Dictionary.withIds(termStats)
-        .write.mode("overwrite").parquet(dictDir)
-    }
-    val dict = spark.read.parquet(dictPath(spark, indexDir))
-
-    Index(docs, dict, spark.read.parquet(postingsDir).as[PostingBlock], stats)
+    // -- stage 3: dict from block metadata (no corpus pass). Shards this
+    // call committed (a fresh build, or a repair of a crashed build or
+    // append) are not covered by any existing snapshot: write the next one.
+    val ver = dictVersion(spark, indexDir)
+    if (todo.nonEmpty || ver == 0L)
+      commitDict(spark, indexDir, Dictionary.fromBlocks(spark.read.parquet(postingsDir)), ver + 1)
+    load(spark, indexDir)
   }
 
-  private def readSmallFile(spark: SparkSession, path: String): Option[String] = {
-    val p = new Path(path)
-    val f = fs(spark, path)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val b = new java.io.ByteArrayOutputStream()
-      try { var c = in.read(); while (c >= 0) { b.write(c); c = in.read() } } finally in.close()
-      Some(b.toString("UTF-8").trim)
-    }
+  /** Current dictionary location: the immutable snapshot `dicts/v=N`
+   * named by the `_dict_version` marker, which [[build]] and
+   * [[graft.streaming.Streams.appendBatch]] advance. */
+  def dictPath(spark: SparkSession, indexDir: String): String = {
+    val v = dictVersion(spark, indexDir)
+    require(v > 0, s"$indexDir has no dictionary snapshot (no _dict_version marker)")
+    s"$indexDir/dicts/v=$v"
   }
-
-  private def writeSmallFile(spark: SparkSession, path: String, body: String): Unit = {
-    val p = new Path(path)
-    val out = fs(spark, path).create(p, true)
-    out.write(body.getBytes("UTF-8")); out.close()
-  }
-
-  /** Current dictionary location: a streaming-appended index carries a
-   * `_dict_version` marker naming the latest immutable snapshot under
-   * `dicts/v=N` (see [[graft.streaming.Streams.appendBatch]]); a pure
-   * batch build uses the flat `dict/` stage dir. */
-  def dictPath(spark: SparkSession, indexDir: String): String =
-    readSmallFile(spark, s"$indexDir/_dict_version")
-      .fold(s"$indexDir/dict")(v => s"$indexDir/dicts/v=${v.toLong}")
 
   def load(spark: SparkSession, indexDir: String): Index = {
     import spark.implicits._

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.data.Transcripts
-import graft.index.{IndexBuild, Tokenize}
+import graft.index.{Dictionary, IndexBuild, Tokenize}
 import graft.model.Turn
 import graft.streaming.Streams
 
@@ -127,13 +127,13 @@ class StreamingSpec extends AnyFunSuite {
       "incremental dict merge must build on the previous snapshot")
   }
 
-  test("legacy start sidecar (no dict base) replays via full re-agg, not a vocabulary wipe") {
+  test("legacy start sidecar (no dict base) is refused, not replayed as a vocabulary wipe") {
     import spark.implicits._
     import java.sql.Timestamp
     val dir = Files.createTempDirectory("graft-stream-legacy-test").toString
     // two batches with DISJOINT vocabularies: a legacy replay of batch 1
     // parsed as dict base 0 would rebuild the dict from batch 1's shards
-    // only and lose batch 0's terms — the wipe must be observable
+    // only and lose batch 0's terms — the replay must fail instead
     def mkTurns(prefix: String, words: String) = Seq(
       Turn(s"$prefix-0", 0, "user", words, null, new Timestamp(0L))).toDS()
     Streams.appendBatch(mkTurns("a", "alpha beta gamma"), dir,
@@ -142,23 +142,46 @@ class StreamingSpec extends AnyFunSuite {
       docsPerShard = 32, batchId = Some(1L))
     // replace batch 1's sidecar with the pre-snapshot format (plain start,
     // no ':baseVersion') and lose its done marker, forcing a replay
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val startBody = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/_batch_1_start"))
-      val b = new java.io.ByteArrayOutputStream()
-      try { var c = in.read(); while (c >= 0) { b.write(c); c = in.read() } } finally in.close()
-      b.toString("UTF-8").trim.split(':')(0)
+    val sidecar = s"$dir/_batch_1_start"
+    IndexBuild.writeSmallFile(spark, sidecar,
+      IndexBuild.readSmallFile(spark, sidecar).get.split(':')(0))
+    IndexBuild.fs(spark, dir).delete(new org.apache.hadoop.fs.Path(s"$dir/_batch_1_done"), false)
+    val e = intercept[IllegalStateException] {
+      Streams.appendBatch(mkTurns("b", "delta epsilon"), dir,
+        docsPerShard = 32, batchId = Some(1L))
     }
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/_batch_1_start"), true)
-    out.write(startBody.getBytes("UTF-8")); out.close()
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_batch_1_done"), false)
-    Streams.appendBatch(mkTurns("b", "delta epsilon"), dir,
-      docsPerShard = 32, batchId = Some(1L))
+    assert(e.getMessage.contains("start:baseVersion"), e.getMessage)
     val terms = IndexBuild.load(spark, dir).dict
       .select("term").collect().map(_.getString(0)).toSet
     assert(terms == Set("alpha", "beta", "gamma", "delta", "epsilon"),
-      s"legacy replay must keep batch 0's vocabulary, got $terms")
+      s"a refused replay must leave the vocabulary intact, got $terms")
+  }
+
+  test("batch build then append: one layout — dict snapshots, _hwm, next shard boundary") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-stream-build-append-test").toString
+    val a = Transcripts.generate(spark, 10, 3, seed = 61L, partitions = 2)
+    val b = Transcripts.generate(spark, 5, 3, seed = 62L, partitions = 1)
+      .withColumn("conv_id", concat(lit("zz-"), col("conv_id"))).as[Turn]
+    IndexBuild.build(a, dir, docsPerShard = 8)
+    def marker(name: String) = IndexBuild.readSmallFile(spark, s"$dir/$name")
+    def listing(sub: String) = new java.io.File(s"$dir/$sub").list()
+      .filterNot(_.startsWith(".")).toSet // Hadoop's local checksum files
+    assert(listing("") == Set("docs", "postings", "dicts", "manifest", "_dict_version", "_hwm"))
+    assert(listing("dicts") == Set("v=1"))
+    assert(marker("_dict_version").contains("1"))
+    val maxA = spark.read.parquet(s"$dir/docs").agg(max("docIdNum")).head().getLong(0)
+    assert(marker("_hwm").contains(maxA.toString))
+
+    Streams.appendBatch(b, dir, docsPerShard = 8)
+    assert(marker("_dict_version").contains("2"))
+    val minB = spark.read.parquet(s"$dir/docs")
+      .filter(col("docId").startsWith("zz-")).agg(min("docIdNum")).head().getLong(0)
+    assert(minB == (maxA / 8 + 1) * 8, s"batch must start at the next shard boundary past $maxA")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("term", "df", "cf").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val want = Dictionary.termStats(Tokenize.termDocs(a).union(Tokenize.termDocs(b)))
+    assert(rows(IndexBuild.load(spark, dir).dict) == rows(want))
   }
 
   test("batch-build repair of a streamed index rebuilds lost shards AND refreshes the dict snapshot") {
