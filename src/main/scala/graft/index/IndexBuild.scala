@@ -47,7 +47,9 @@ object IndexBuild {
 
   final case class Index(docs: DataFrame, dict: DataFrame,
                          blocks: Dataset[PostingBlock], stats: CorpusStats) {
-    /** Denormalized exact-path posting source (docId string key). */
+    /** Denormalized exact-path posting source (docId string key). A `term`
+     * filter on it is pushed below the block decode to the postings scan;
+     * the docs table is still read whole on every call. */
     def termDocs: DataFrame =
       PostingsBuilder.decodeBlocks(blocks)
         .join(docs.select("docIdNum", "docId"), "docIdNum")

@@ -194,17 +194,29 @@ object PostingsBuilder {
           def next(): PostingBlock = { if (!hasNext) throw new NoSuchElementException; flushed.next() }
         }
 
+  /** One decoded posting of a block (the struct [[decodeBlocks]] inlines). */
+  private[index] final case class Posting(docIdNum: Long, tf: Long, docLen: Long)
+
+  private val decodeUdf = udf { (docBytes: Array[Byte], tfBytes: Array[Byte], dlBytes: Array[Byte], n: Int) =>
+    val d = Codec.decodeDeltas(docBytes, n)
+    val t = Codec.decodeTfs(tfBytes, n)
+    val l = Codec.decodeTfs(dlBytes, n)
+    Array.tabulate(n)(i => Posting(d(i), t(i), l(i)))
+  }
+
   /** Expand blocks back to (shard, term, docIdNum, tf, docLen) rows — the
    * decode side of the codec, used by the exact-over-blocks path and by
-   * round-trip tests. */
-  def decodeBlocks(blocks: Dataset[PostingBlock]): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    blocks.flatMap { b =>
-      val d = Codec.decodeDeltas(b.docBytes, b.n)
-      val t = Codec.decodeTfs(b.tfBytes, b.n)
-      val l = Codec.decodeTfs(b.dlBytes, b.n)
-      Iterator.tabulate(b.n)(i => (b.shard, b.term, d(i), t(i), l(i)))
-    }.toDF("shard", "term", "docIdNum", "tf", "docLen")
-  }
+   * round-trip tests.
+   *
+   * The decode is an untyped `Generate` (`inline` over a per-block UDF)
+   * rather than a typed `flatMap`, so the plan stays transparent to
+   * Catalyst: a consumer's predicate on `term` (or `shard`) is pushed
+   * through the `Generate` — and through [[IndexBuild.Index.termDocs]]'
+   * docs join — down to the postings scan (`PushedFilters: [In(term, …)]`,
+   * pruning row groups by their term stats). Only the blocks of the terms
+   * asked for are read and decoded; an unfiltered consumer still decodes
+   * every block. */
+  def decodeBlocks(blocks: Dataset[PostingBlock]): DataFrame =
+    blocks.select(col("shard"), col("term"),
+      inline(decodeUdf(col("docBytes"), col("tfBytes"), col("dlBytes"), col("n"))))
 }

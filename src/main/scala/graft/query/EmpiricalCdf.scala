@@ -59,7 +59,6 @@ object EmpiricalCdf {
              roundTo: Int = 4): DataFrame = {
     val spark = termDocs.sparkSession
     val qts = Exact.qtermStats(spark, topics, dict, tag)
-    val terms = Exact.queryTerms(topics, tag).map(_._2).distinct
     val avgdl = stats.numTokens.toDouble / stats.numDocs.toDouble
     // Precision.round(tfn, 4) — EModelBase.java:90 (HALF_UP, as Spark round)
     val tfn = round(norm.tfnC(col("tf").cast("double"),
@@ -68,8 +67,7 @@ object EmpiricalCdf {
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     // CDF over the term's postings BEFORE the query join — a term shared by
     // several topics must not count its postings once per topic
-    val withCdf = termDocs
-      .filter(col("term").isin(terms: _*))
+    val withCdf = Exact.postingsFor(termDocs, Exact.termsOf(topics, tag))
       .withColumn("tfn", tfn)
       .withColumn("cdf", count(lit(1)).over(w))
     withCdf

@@ -21,11 +21,15 @@ import graft.model.{CorpusStats, Topic}
  *  - zero-hit queries emit a collection sentinel doc at rank 1, score 0
  *    (`Searcher.java:193-202`).
  *
- * Plan shape at scale: the posting source is scanned ONCE and reduced by a
- * broadcast hash join against the (tiny) query-term table — no shuffle of the
- * posting side until the per-(qid,docId) partial aggregate, whose map-side
- * combine shrinks the shuffle to |matched docs| rows. The final top-k window
- * shuffles only per-query candidates.
+ * Plan shape at scale: every entry point first restricts the posting source
+ * to the query's terms ([[postingsFor]]). Over a block index that predicate
+ * reaches the postings scan before decode
+ * ([[graft.index.PostingsBuilder.decodeBlocks]]), so only the query terms'
+ * blocks are read, decoded and docs-joined. The survivors meet the (tiny)
+ * query-term table in a broadcast hash join — no shuffle of the posting side
+ * until the per-(qid,docId) partial aggregate, whose map-side combine shrinks
+ * the shuffle to |matched docs| rows. The final top-k window shuffles only
+ * per-query candidates.
  */
 object Exact {
 
@@ -37,6 +41,16 @@ object Exact {
       val m = terms.groupBy(identity).view.mapValues(_.size).toMap
       m.map { case (term, mult) => (t.qid, term, mult, m.size) }
     }
+
+  /** The postings of `terms` only. Over [[graft.index.IndexBuild.Index.termDocs]]
+   * the filter is pushed below the block decode to the postings scan; an
+   * empty `terms` yields no rows. */
+  def postingsFor(termDocs: DataFrame, terms: Seq[String]): DataFrame =
+    termDocs.filter(col("term").isin(terms: _*))
+
+  /** Distinct analyzed terms of a topic set — the [[postingsFor]] list. */
+  def termsOf(topics: Seq[Topic], tag: Analyzer.Tag): Seq[String] =
+    queryTerms(topics, tag).map(_._2).distinct
 
   /** Query-term table joined with per-term (df, cf): the dictionary is
    * scanned once and reduced via a broadcast of the query terms. `qLen` is
@@ -95,7 +109,7 @@ object Exact {
       case Some(d) => round(sum("s"), d).as("score")
       case None    => sum("s").cast("float").as("score")
     }
-    val scored = termDocs
+    val scored = postingsFor(termDocs, termsOf(topics, tag))
       .join(broadcast(qts), Seq("term"))
       .withColumn("s", perTermScore(model, stats, floatBoundary = roundedDouble.isEmpty))
       .groupBy(col("qid"), col("docId"))
@@ -127,9 +141,9 @@ object Exact {
     }
   }
 
-  /** R5 multi-model pass: ONE scan of the posting source producing one score
-   * column per model (`FeatureSearcher.java:51-140` recomputes all models per
-   * (query, doc); here it is a single aggregate). */
+  /** R5 multi-model pass: ONE scan of the query terms' postings producing
+   * one score column per model (`FeatureSearcher.java:51-140` recomputes all
+   * models per (query, doc); here it is a single aggregate). */
   def scoreAllModels(termDocs: DataFrame, dict: DataFrame, stats: CorpusStats,
                      topics: Seq[Topic], models: Seq[Scoring.Model],
                      tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame = {
@@ -137,7 +151,7 @@ object Exact {
     val qts = qtermStats(spark, topics, dict, tag)
     val aggs = models.map(m =>
       sum(perTermScore(m, stats)).cast("float").cast("double").as(m.name))
-    termDocs
+    postingsFor(termDocs, termsOf(topics, tag))
       .join(broadcast(qts), Seq("term"))
       .groupBy(col("qid"), col("docId"))
       .agg(aggs.head, aggs.tail: _*)
@@ -150,8 +164,9 @@ object Exact {
                    conjunctive: Boolean = false): DataFrame = {
     val spark = termDocs.sparkSession
     import spark.implicits._
-    val q = queryTerms(topics, tag).toDF("qid", "term", "mult", "nTerms")
-    val grouped = termDocs.join(broadcast(q), Seq("term"))
+    val qt = queryTerms(topics, tag)
+    val q = qt.toDF("qid", "term", "mult", "nTerms")
+    val grouped = postingsFor(termDocs, qt.map(_._2).distinct).join(broadcast(q), Seq("term"))
       .groupBy("qid", "docId")
       .agg(count(lit(1)).as("matched"), first("nTerms").as("nTerms"))
     val m = if (conjunctive) grouped.filter(col("matched") === col("nTerms")) else grouped

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.model.CorpusStats
+import graft.query.Exact
 
 /**
  * Per-term frequency-distribution histograms (SURVEY.md §2.6 A4-A7).
@@ -13,7 +14,9 @@ import graft.model.CorpusStats
  * denormalized posting source `termDocs(docId, docLen, term, tf)`:
  * bin a per-posting relative frequency with the LengthNormalized rule
  * (`freq/LengthNormalized.java:15-41`) and count per (term, bin).
- * One broadcast-filtered scan + one partial-aggregated groupBy each.
+ * Each reads only the asked terms' postings ([[Exact.postingsFor]]; over a
+ * block index the term predicate reaches the postings scan before decode)
+ * and runs one partial-aggregated groupBy.
  */
 object Histograms {
 
@@ -27,7 +30,7 @@ object Histograms {
   /** A4 — raw tf normalized by doc length (`TermFreqDistribution.java:40-78`):
    * pct = tf/docLen. */
   def lengthNormalized(termDocs: DataFrame, terms: Seq[String], bins: Int): DataFrame =
-    termDocs.filter(col("term").isin(terms: _*))
+    Exact.postingsFor(termDocs, terms)
       .withColumn("bin", binCol(col("tf").cast("double") / col("docLen").cast("double"), bins))
       .groupBy("term", "bin").agg(count(lit(1)).as("cnt"))
 
@@ -43,7 +46,7 @@ object Histograms {
    * (the reference pairs `QueryFreqDistribution`/`TermFreqDistribution`
    * with any `BinningStrategy`). */
   def roundBinned(termDocs: DataFrame, terms: Seq[String], digits: Int): DataFrame =
-    termDocs.filter(col("term").isin(terms: _*))
+    Exact.postingsFor(termDocs, terms)
       .withColumn("bin", roundBinCol(col("tf").cast("double") / col("docLen").cast("double"), digits))
       .groupBy("term", "bin").agg(count(lit(1)).as("cnt"))
 
@@ -76,7 +79,7 @@ object Histograms {
     val bin = phiBinBoundaries(bins).foldLeft(lit(1)) { (acc, b) =>
       acc + when(z >= lit(b), lit(1)).otherwise(lit(0))
     }
-    termDocs.filter(col("term").isin(terms: _*))
+    Exact.postingsFor(termDocs, terms)
       .join(broadcast(dict.filter(col("term").isin(terms: _*)).select("term", "cf")), "term")
       .withColumn("bin", bin.cast("int"))
       .groupBy("term", "bin").agg(count(lit(1)).as("cnt"))
@@ -92,13 +95,13 @@ object Histograms {
 
     // The tf=0 bin depends only on docLen, so the complement needs NO join
     // against the corpus: bin ALL docs by docLen once (bins rows), subtract
-    // each term's matching docs' docLen-bin counts. One broadcast-pruned
+    // each term's matching docs' docLen-bin counts. One term-pruned
     // posting scan + one docs scan — no N×|terms| crossJoin at any scale.
     val mBin = binCol((col("tf").cast("double") + 1) / (col("docLen").cast("double") + 1), bins)
     val dBin = binCol(lit(1.0) / (col("docLen").cast("double") + 1), bins)
 
     // single scan of the filtered postings: counts per (term, match-bin, docLen-bin)
-    val grouped = termDocs.filter(col("term").isin(terms: _*))
+    val grouped = Exact.postingsFor(termDocs, terms)
       .groupBy(col("term"), mBin.as("mbin"), dBin.as("dbin"))
       .agg(count(lit(1)).as("c")) // ≤ |terms|·(bins+1)² rows
     val matching = grouped.groupBy(col("term"), col("mbin").as("bin"))
@@ -124,7 +127,7 @@ object Histograms {
   def dirichlet(termDocs: DataFrame, dict: DataFrame, stats: CorpusStats,
                 terms: Seq[String], bins: Int): DataFrame = {
     val e = (col("cf") * col("docLen")).cast("double") / lit(stats.numTokens.toDouble)
-    termDocs.filter(col("term").isin(terms: _*))
+    Exact.postingsFor(termDocs, terms)
       .join(broadcast(dict.filter(col("term").isin(terms: _*)).select("term", "cf")), "term")
       .withColumn("bin", binCol((col("tf").cast("double") + e) / (col("docLen").cast("double") + e), bins))
       .groupBy("term", "bin").agg(count(lit(1)).as("cnt"))

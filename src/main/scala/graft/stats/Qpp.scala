@@ -96,12 +96,14 @@ object Qpp {
   def varPredictor(spark: SparkSession, termDocs: DataFrame, topics: Seq[Topic],
                    stats: CorpusStats, tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame = {
     import spark.implicits._
-    val q = Exact.queryTerms(topics, tag).map { case (qid, t, _, _) => (qid, t) }.toDF("qid", "term")
+    val qt = Exact.queryTerms(topics, tag).map { case (qid, t, _, _) => (qid, t) }
+    val q = qt.toDF("qid", "term")
     val n = stats.numDocs.toDouble
+    val postings = Exact.postingsFor(termDocs, qt.map(_._2).distinct)
     // wdt needs df inside the row function → two passes: df, then wdt agg
-    val dfPerTerm = termDocs.join(broadcast(q.select("term").distinct()), Seq("term"))
+    val dfPerTerm = postings
       .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val wdt = termDocs.join(broadcast(dfPerTerm), Seq("term"))
+    val wdt = postings.join(broadcast(dfPerTerm), Seq("term"))
       .withColumn("wdt", lit(1d) + log(col("tf").cast("double")) * log(lit(1d) + lit(n) / col("df")))
       .groupBy("term")
       .agg(first("df").as("df"), sum("wdt").as("wdtSum"), sum(col("wdt") * col("wdt")).as("wdtSq"))
@@ -122,7 +124,7 @@ object Qpp {
     val termsByQid = topics.map(t =>
       t.qid -> Analyzer.analyzeQuery(t.query, tag).distinct).toMap
     val allTerms = termsByQid.values.flatten.toSeq.distinct
-    val posting = termDocs.filter(col("term").isin(allTerms: _*)).select("term", "docId")
+    val posting = Exact.postingsFor(termDocs, allTerms).select("term", "docId")
 
     val dfMap = posting.groupBy("term").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -18,9 +18,11 @@ import graft.query.{Exact, Scoring}
  * evaluates each run file; here the WHOLE grid is scored in ONE posting
  * scan — a score column per model in a single aggregate (the R5 pattern),
  * unpivoted with `stack`, ranked per (model, qid) in one window, and
- * evaluated per (model, qid) in one [[Metrics.perQueryGrouped]] pass. At
- * 100 TB the sweep costs one scan + one |models|-wide shuffle instead of
- * 190 scans.
+ * evaluated per (model, qid) in one [[Metrics.perQueryGrouped]] pass. The
+ * scan is of the query terms' postings only ([[Exact.postingsFor]]; over a
+ * block index the term predicate reaches the postings scan before decode),
+ * so at 100 TB the sweep costs one read of those blocks + one |models|-wide
+ * shuffle instead of 190 searches.
  */
 object ParamTrain {
 
@@ -73,7 +75,7 @@ object ParamTrain {
         case None    => s.cast("float").cast("double")
       }).as(m.name)
     }
-    val scored = termDocs
+    val scored = Exact.postingsFor(termDocs, Exact.termsOf(topics, tag))
       .join(broadcast(qts), Seq("term"))
       .groupBy(col("qid"), col("docId"))
       .agg(aggs.head, aggs.tail: _*)

@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, In, InSet}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +14,8 @@ import graft.data.Transcripts
 import graft.index.{Dictionary, IndexBuild, Tokenize}
 import graft.model.{Topic, Turn}
 import graft.query.{BlockMaxWand, Exact, Scoring}
+import graft.stats.Histograms
+import graft.train.ParamTrain
 
 /**
  * End-to-end engine invariants (SURVEY.md §5.2): rank-identity against the
@@ -210,6 +216,77 @@ class EngineSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3))
     assert(viaBlocks.toSeq == direct.toSeq)
+    // term-restricted: the predicate is applied below the decode, rows unchanged
+    val terms = Seq("w0", "needle3", "w42", "qqqmissing")
+    val restricted = Exact.postingsFor(index.termDocs, terms)
+      .select("docId", "docLen", "term", "tf")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
+      .sortBy(t => (t._1, t._3))
+    val want = direct.filter(t => terms.contains(t._3))
+    assert(want.nonEmpty && want.length < direct.length)
+    assert(restricted.toSeq == want.toSeq)
+  }
+
+  /** Whether `e` is an `In`/`InSet` predicate on a `term` column (the
+   * optimizer turns long `In` lists into `InSet`). */
+  private def isTermIn(e: Expression): Boolean = e.exists {
+    case In(a: AttributeReference, _)    => a.name == "term"
+    case InSet(a: AttributeReference, _) => a.name == "term"
+    case _                               => false
+  }
+
+  test("exact search over blocks filters on the query terms below the decode") {
+    val ranked = Exact.search(index.termDocs, index.dict, index.stats, topics, model, K,
+      sentinelDocId = Some(SENT))
+    val plan = ranked.queryExecution.optimizedPlan
+    val decodes = plan.collect { case g: Generate => g }
+    assert(decodes.nonEmpty, s"block decode is not a Generate:\n$plan")
+    decodes.foreach { g =>
+      val below = g.child.collect { case f: Filter if isTermIn(f.condition) => f }
+      assert(below.nonEmpty, s"no term filter below the decode:\n$plan")
+    }
+    // …and it reaches the postings scan as a pushed parquet filter
+    val physical = ranked.queryExecution.sparkPlan
+    val scans = physical.collect {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains("postings")) => s
+    }
+    assert(scans.nonEmpty && scans.forall(_.dataFilters.exists(isTermIn)),
+      s"postings scan without a term filter:\n$physical")
+  }
+
+  test("exact search, sweep and phi over blocks ≡ over the posting source") {
+    val td = Tokenize.termDocs(turns)
+    val dict = Dictionary.termStats(td)
+    val stats = Tokenize.corpusStats(Tokenize.docs(turns))
+    assert(stats == index.stats)
+    // topic 4's terms are all absent from the corpus; topic 7 analyzes to no terms
+    val ts = topics :+ Topic(7, "?! ...")
+    def ranking(termDocs: DataFrame, d: DataFrame, t: Seq[Topic]) =
+      Exact.search(termDocs, d, stats, t, model, K, sentinelDocId = Some(SENT))
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getFloat(3))).toSet
+    val viaBlocks = ranking(index.termDocs, index.dict, ts)
+    assert(viaBlocks == ranking(td, dict, ts))
+    assert(viaBlocks.filter(r => r._1 == 4 || r._1 == 7) == Set((4, SENT, 1, 0.0f), (7, SENT, 1, 0.0f)))
+    // an empty term list: only the sentinel row
+    assert(Exact.termsOf(Seq(Topic(7, "?! ...")), Analyzer.Tag.NoStem).isEmpty)
+    assert(ranking(index.termDocs, index.dict, Seq(Topic(7, "?! ..."))) == Set((7, SENT, 1, 0.0f)))
+
+    val models = Seq(model, Scoring.PL2c(2.0), Scoring.DirichletLM())
+    def sweep(termDocs: DataFrame, d: DataFrame) =
+      ParamTrain.sweepRuns(termDocs, d, stats, ts, models, K)
+        .select("model", "qid", "docId", "rank", "score")
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getInt(3), r.getDouble(4))).toSet
+    val sweepBlocks = sweep(index.termDocs, index.dict)
+    assert(sweepBlocks.map(_._1) == models.map(_.name).toSet)
+    assert(sweepBlocks == sweep(td, dict))
+
+    val terms = Seq("w0", "w3", "needle7", "w500", "qqqmissing")
+    def phi(termDocs: DataFrame, d: DataFrame) =
+      Histograms.phi(termDocs, d, stats, terms, 10)
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
+    val binsBlocks = phi(index.termDocs, index.dict)
+    assert(binsBlocks.map(_._1) == terms.toSet - "qqqmissing")
+    assert(binsBlocks == phi(td, dict))
   }
 
   test("corpus stats match hand computation") {
